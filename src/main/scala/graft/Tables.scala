@@ -18,8 +18,8 @@ object Tables {
     *
     * `spark.read.parquet(path)` resolves the relation EAGERLY on the
     * driver: file listing + parquet footer schema inference, measured
-    * at ~120 ms per call (tools/DriverCost) — pure driver-side fixed
-    * cost that every query pays per table per action at ANY data
+    * at ~120 ms per call — pure driver-side fixed cost that every
+    * query pays per table per action at ANY data
     * size. A warehouse resolves a table's schema once (the catalog);
     * re-inferring it on every query is an artifact of reading bare
     * paths. This caches the resolved DataFrame (an immutable LAZY

@@ -142,8 +142,8 @@ object IndexLayout {
     *
     * `spark.read.parquet(dir)` infers the schema EAGERLY per call,
     * which runs a footer-reading Spark job (measured ~40-120 ms of
-    * driver+job time at any data size, tools/DriverCost) — per
-    * component, per probe, per rep. A component's SCHEMA is a layout
+    * driver+job time at any data size) — per component, per probe,
+    * per rep. A component's SCHEMA is a layout
     * invariant: every writer of a given component (build, append,
     * compact) writes the identical column set and types, and rewrites
     * land in fresh generation directories. So the schema is cached per
@@ -235,9 +235,10 @@ object IndexLayout {
         val crc = new java.util.zip.CRC32()
         val in = fs.open(st.getPath)
         try {
+          // readNBytes loops to 4 KiB or EOF: a Hadoop stream may
+          // return short reads
           val buf = new Array[Byte](4096)
-          val n = in.read(buf)
-          if (n > 0) crc.update(buf, 0, n)
+          crc.update(buf, 0, in.readNBytes(buf, 0, buf.length))
         } finally in.close()
         s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}:${crc.getValue}"
       }

@@ -1,12 +1,11 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.model.Granularity
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.plans.GraftExtensions
 import graft.queries.DruidQueries
 import graft.sources.SegmentStore
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end narrative run: the whole engine composed as one
@@ -21,15 +20,7 @@ import org.apache.spark.sql.functions._
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus)
     GraftExtensions.register(spark)
 
     println("== 1. rollup-ingest events into a versioned segment store ==")

@@ -319,38 +319,46 @@ class IndexLayoutSpec extends SparkSpec {
   }
 
   test("collectSmallComponent detects a same-tick in-place rewrite (same file name, length AND mtime)") {
-    val dir = tmp("sametick")
-    val cdir = s"$dir/meta"
-    Seq((1L, 111L)).toDF("k", "v").coalesce(1)
-      .write.mode("overwrite").parquet(cdir)
-    val first = IndexLayout.collectSmallComponent(spark, cdir)
-    assert(first.map(_.getLong(1)).toSeq == Seq(111L))
-    // craft a same-length replacement: identical schema and row count,
-    // different value (fixed-width long encoding ⇒ equal file bytes)
-    val alt = s"$dir/alt"
-    Seq((1L, 222L)).toDF("k", "v").coalesce(1)
-      .write.mode("overwrite").parquet(alt)
-    val dataFile = new java.io.File(cdir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val altFile = new java.io.File(alt).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    assert(altFile.length == dataFile.length,
-      "test premise: the rewrite must not change the file length")
-    val mtime = dataFile.lastModified()
-    java.nio.file.Files.copy(altFile.toPath, dataFile.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // drop Hadoop LocalFileSystem's checksum sidecars: the raw copy
-    // above models a writer outside the Hadoop API (a mismatched
-    // sidecar would already fail the read loudly — the SILENT case
-    // this spec pins is name+length+mtime all unchanged)
-    new java.io.File(cdir).listFiles()
-      .filter(_.getName.endsWith(".crc")).foreach(_.delete())
-    assert(dataFile.setLastModified(mtime))
-    // name, length and mtime are all unchanged — only the first-block
-    // CRC in the signature can catch this rewrite
-    val second = IndexLayout.collectSmallComponent(spark, cdir)
-    assert(second.map(_.getLong(1)).toSeq == Seq(222L),
-      "same-tick in-place rewrite served stale cached rows")
-    rm(dir)
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.shortread.impl", classOf[ShortReadFileSystem].getName)
+    // the plain local filesystem, and one whose streams return a byte
+    // per read (legal for any Hadoop stream): the first-block CRC must
+    // cover the same bytes either way
+    for (scheme <- Seq("", "shortread://")) {
+      val dir = tmp("sametick")
+      val cdir = s"$dir/meta"
+      Seq((1L, 111L)).toDF("k", "v").coalesce(1)
+        .write.mode("overwrite").parquet(cdir)
+      // drop Hadoop LocalFileSystem's checksum sidecars: the raw copy
+      // below models a writer outside the Hadoop API (a mismatched
+      // sidecar would already fail the read loudly — the SILENT case
+      // this spec pins is name+length+mtime all unchanged), and a
+      // filesystem that lists sidecars must see the same listing twice
+      new java.io.File(cdir).listFiles()
+        .filter(_.getName.endsWith(".crc")).foreach(_.delete())
+      val first = IndexLayout.collectSmallComponent(spark, scheme + cdir)
+      assert(first.map(_.getLong(1)).toSeq == Seq(111L))
+      // craft a same-length replacement: identical schema and row count,
+      // different value (fixed-width long encoding ⇒ equal file bytes)
+      val alt = s"$dir/alt"
+      Seq((1L, 222L)).toDF("k", "v").coalesce(1)
+        .write.mode("overwrite").parquet(alt)
+      val dataFile = new java.io.File(cdir).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val altFile = new java.io.File(alt).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      assert(altFile.length == dataFile.length,
+        "test premise: the rewrite must not change the file length")
+      val mtime = dataFile.lastModified()
+      java.nio.file.Files.copy(altFile.toPath, dataFile.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(dataFile.setLastModified(mtime))
+      // name, length and mtime are all unchanged — only the first-block
+      // CRC in the signature can catch this rewrite
+      val second = IndexLayout.collectSmallComponent(spark, scheme + cdir)
+      assert(second.map(_.getLong(1)).toSeq == Seq(222L),
+        s"same-tick in-place rewrite served stale cached rows ($scheme$cdir)")
+      rm(dir)
+    }
   }
 }

@@ -5,9 +5,15 @@ Runs each SparkEntry.oracleSql in DuckDB over the same parquet tables,
 loads the Spark result parquet written by graft.Verify, sorts columns by
 name and rows by value, and compares. Usage:
 
-    python3 tools/check_oracle.py /root/testdata/sf0.01 /tmp/verify_out
+    python3 -u tools/check_oracle.py <sf_dir> <out_dir> [--timeout S] [q ...]
+
+Trailing query names restrict the check to those queries. `--timeout S`
+runs each DuckDB mirror in a subprocess with an S-second budget, for
+scaled-data runs where single mirrors can be slow: a query over budget
+is reported SLOW and skipped, not silently lost. Exits 1 if any query
+FAILs; SLOW-skipped queries do not fail the run.
 """
-import json, sys, glob, math
+import argparse, glob, json, multiprocessing as mp, sys, time
 import duckdb
 import pandas as pd
 
@@ -67,23 +73,71 @@ def compare(name, spark_df, duck_df, tol=1e-9):
                 return f"VALUE MISMATCH col={c} row={i} spark={av[i]!r} oracle={bv[i]!r}"
     return None
 
-def main(sf_dir, out_dir):
-    con = connect_views(sf_dir)
+def run_oracle(sf_dir, sql):
+    try:
+        return ("ok", connect_views(sf_dir).execute(sql).df())
+    except Exception as e:
+        return ("err", str(e))
+
+def run_oracle_child(sf_dir, sql, q):
+    q.put(run_oracle(sf_dir, sql))
+
+def oracle_df(sf_dir, sql, timeout):
+    """("ok", df), ("err", message), or ("slow", None) past `timeout` s."""
+    if timeout is None:
+        return run_oracle(sf_dir, sql)
+    q = mp.Queue()
+    proc = mp.Process(target=run_oracle_child, args=(sf_dir, sql, q))
+    proc.start()
+    # q.get BEFORE join: a large result blocks the child's queue write
+    # until the parent reads — join-first deadlocks on any output
+    # bigger than the pipe buffer
+    try:
+        result = q.get(timeout=timeout)
+    except Exception:
+        proc.terminate()
+        proc.join()
+        return ("slow", None)
+    proc.join(60)
+    return result
+
+def main(sf_dir, out_dir, timeout=None, names=()):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_ok = 0
-    for name, sql in sorted(oracle.items()):
+    names = sorted(names or oracle)
+    n_ok, slow, failed = 0, [], []
+    def fail(name, msg):
+        print(f"FAIL {name}: {msg}", flush=True)
+        failed.append(name)
+    for name in names:
+        if name not in oracle:
+            fail(name, "not in oracle_sql.json"); continue
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
-            print(f"FAIL {name}: no spark output"); continue
+            fail(name, "no spark output"); continue
         spark_df = pd.concat([pd.read_parquet(f) for f in files])
-        try:
-            duck_df = con.execute(sql).df()
-        except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {e}"); continue
-        err = compare(name, spark_df, duck_df)
-        if err: print(f"FAIL {name}: {err}")
-        else: n_ok += 1; print(f"OK   {name} ({len(duck_df)} rows)")
-    print(f"== {n_ok}/{len(oracle)} matched")
+        t0 = time.time()
+        status, payload = oracle_df(sf_dir, oracle[name], timeout)
+        dt = time.time() - t0
+        if status == "slow":
+            print(f"SLOW {name}: oracle exceeded {timeout}s (spark side: {len(spark_df)} rows)", flush=True)
+            slow.append(name)
+        elif status == "err":
+            fail(name, f"oracle SQL error: {payload}")
+        elif err := compare(name, spark_df, payload):
+            fail(name, f"{err} [{dt:.1f}s]")
+        else:
+            n_ok += 1
+            print(f"OK   {name} ({len(payload)} rows) [{dt:.1f}s]", flush=True)
+    print(f"== {n_ok}/{len(names)} matched, {len(slow)} slow-skipped {slow}, "
+          f"{len(failed)} failed {failed}", flush=True)
+    return 1 if failed else 0
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    ap = argparse.ArgumentParser(description="Compare graft.Verify output with DuckDB oracles.")
+    ap.add_argument("sf_dir")
+    ap.add_argument("out_dir")
+    ap.add_argument("names", nargs="*", metavar="q", help="only these queries")
+    ap.add_argument("--timeout", type=float, metavar="S",
+                    help="per-query DuckDB budget in seconds (subprocess); over it = SLOW")
+    a = ap.parse_intermixed_args()
+    sys.exit(main(a.sf_dir, a.out_dir, a.timeout, a.names))

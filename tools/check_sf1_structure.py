@@ -6,7 +6,7 @@ ScaleData's per-copy token bijection makes cross-copy near-duplication
 impossible (copies are token-disjoint, and q_contamination's probes are
 copy-0-only doc_id < 5), so text-derived pair/cluster outputs at sf1
 must decompose into `copies` stride-shifted images of the sf0.1 output
-— which IS DuckDB-verified (check_oracle_timed at sf0.1 runs the full
+— which IS DuckDB-verified (check_oracle --timeout at sf0.1 runs the full
 mirrors at 1/10 cost). Checks here are value-exact, not statistical:
 
   1. no output pair crosses a copy boundary;
